@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline queries at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is forced end-to-end through the
   * `noop` sink (full computation, no `count()` shortcut that would let
@@ -29,36 +27,18 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      // Tz-less parquet timestamps (one observed testdata regeneration)
-      // must surface as TimestampType, not NTZ — see Tables.apply.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // The warmup pass exists to pre-compile every query's whole-stage
-      // codegen, but the compiled-class cache defaults to 100 entries —
-      // a 25-query workload evicts the early queries before their timed
-      // run, silently re-charging ~3s of Janino compilation to the most
-      // complex plans. Size the cache to the workload.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // r16 (guide §2.2): AQE's coalescing floor. parallelismFirst=true
-      // (default) sizes post-shuffle partitions at totalBytes/parallelism
-      // — but never below minPartitionSize, whose 1 MB default collapses
-      // every sub-32 MB shuffle to a handful of partitions (at sf0.1 the
-      // per-user window stages ran as ONE task on one core). 64 KB keeps
-      // reduce stages ~core-wide on small inputs and is inert at scale:
-      // the floor only binds when a shuffle totals < cores × 1 MB, i.e.
-      // when the data is tiny anyway. Env-overridable for cluster tuning.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "65536"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session(s"local[$cpus]", cpus.toInt)
+    // AQE's coalescing floor. parallelismFirst=true (default) sizes
+    // post-shuffle partitions at totalBytes/parallelism — but never below
+    // minPartitionSize, whose 1 MB default collapses every sub-32 MB
+    // shuffle to a handful of partitions (at sf0.1 the per-user window
+    // stages ran as ONE task on one core). 64 KB keeps reduce stages
+    // ~core-wide on small inputs and is inert at scale: the floor only
+    // binds when a shuffle totals < cores × 1 MB, i.e. when the data is
+    // tiny anyway. Env-overridable for cluster tuning. A runtime conf, so
+    // Bench sets it on the library's session instead of building its own.
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+      sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "65536"))
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: parquet footers, codegen compiler, shuffle machinery.
     Tables.all.foreach(t => Tables(spark, sfDir, t).count())

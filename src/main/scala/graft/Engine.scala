@@ -13,8 +13,14 @@ object Engine {
 
   /** Build a session with the scale-relevant optimizer features on: AQE
     * (runtime re-planning + skew handling), CBO, runtime bloom filters,
-    * parquet aggregate pushdown. `shufflePartitions` should track the
-    * cluster's effective parallelism (matches cores in local mode).
+    * parquet aggregate pushdown, and a codegen cache sized to a workload.
+    * `shufflePartitions` should track the cluster's effective parallelism
+    * (matches cores in local mode). This is the one session profile:
+    * `Bench` and `Verify` build through it too.
+    *
+    * `spark.sql.codegen.cache.maxEntries` is a static conf read once, when
+    * the JVM first generates code: the first session in the JVM fixes it,
+    * and a later session's value is ignored.
     */
   def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
     val spark = SparkSession.builder()
@@ -30,6 +36,13 @@ object Engine {
       // Tz-less parquet timestamps (one observed testdata regeneration)
       // must surface as TimestampType, not NTZ — see Tables.apply.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      // The compiled-class cache defaults to 100 entries, an LRU over
+      // whole-stage and expression classes. Eleven relational queries
+      // already need ~190 of them, so a caller cycling through a workload
+      // evicts every class before its next use and Janino recompiles the
+      // lot on every pass (seconds of CPU per pass). 2000 holds the whole
+      // query catalogue.
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     registerFunctions(spark)

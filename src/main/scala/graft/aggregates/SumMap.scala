@@ -33,17 +33,14 @@ class SumMap extends Aggregator[SumMapInput, java.util.HashMap[String, Long], Ma
     with Serializable {
   def zero: java.util.HashMap[String, Long] = new java.util.HashMap
   def reduce(b: java.util.HashMap[String, Long], e: SumMapInput): java.util.HashMap[String, Long] = {
-    val add = math.rint(e.value * 1e6).toLong
-    val old = b.get(e.key) // absent key unboxes to 0L (BoxesRunTime), guarded below anyway
-    b.put(e.key, if (b.containsKey(e.key)) old + add else add)
+    b.put(e.key, b.getOrDefault(e.key, 0L) + math.rint(e.value * 1e6).toLong)
     b
   }
   def merge(a: java.util.HashMap[String, Long], b: java.util.HashMap[String, Long]): java.util.HashMap[String, Long] = {
     val it = b.entrySet().iterator()
     while (it.hasNext) {
       val kv = it.next()
-      val k = kv.getKey
-      if (a.containsKey(k)) a.put(k, a.get(k) + kv.getValue) else a.put(k, kv.getValue)
+      a.put(kv.getKey, a.getOrDefault(kv.getKey, 0L) + kv.getValue)
     }
     a
   }
@@ -64,27 +61,29 @@ object SumMap {
   * mutable-buffer shape as [[SumMap]].
   */
 class MinMaxMap(isMin: Boolean)
-    extends Aggregator[SumMapInput, java.util.HashMap[String, Double], Map[String, Double]]
+    extends Aggregator[SumMapInput, java.util.HashMap[String, java.lang.Double], Map[String, Double]]
     with Serializable {
-  private def pick(a: Double, b: Double): Double =
-    if (isMin) math.min(a, b) else math.max(a, b)
-  def zero: java.util.HashMap[String, Double] = new java.util.HashMap
-  def reduce(b: java.util.HashMap[String, Double], e: SumMapInput): java.util.HashMap[String, Double] = {
-    b.put(e.key, if (b.containsKey(e.key)) pick(b.get(e.key), e.value) else e.value)
+  /** `old` is the buffer's value, null when the key is absent. The buffer
+    * holds boxed doubles so that absence stays visible: a scala.Double
+    * view would unbox null to 0.0. */
+  private def pickWith(old: java.lang.Double, v: Double): java.lang.Double =
+    if (old == null) v else if (isMin) math.min(old, v) else math.max(old, v)
+  def zero: java.util.HashMap[String, java.lang.Double] = new java.util.HashMap
+  def reduce(b: java.util.HashMap[String, java.lang.Double], e: SumMapInput): java.util.HashMap[String, java.lang.Double] = {
+    b.put(e.key, pickWith(b.get(e.key), e.value))
     b
   }
-  def merge(a: java.util.HashMap[String, Double], b: java.util.HashMap[String, Double]): java.util.HashMap[String, Double] = {
+  def merge(a: java.util.HashMap[String, java.lang.Double], b: java.util.HashMap[String, java.lang.Double]): java.util.HashMap[String, java.lang.Double] = {
     val it = b.entrySet().iterator()
     while (it.hasNext) {
       val kv = it.next()
-      val k = kv.getKey
-      if (a.containsKey(k)) a.put(k, pick(a.get(k), kv.getValue)) else a.put(k, kv.getValue)
+      a.put(kv.getKey, pickWith(a.get(kv.getKey), kv.getValue))
     }
     a
   }
-  def finish(b: java.util.HashMap[String, Double]): Map[String, Double] =
-    TreeMap.from(b.asScala)
-  def bufferEncoder: Encoder[java.util.HashMap[String, Double]] = Encoders.kryo
+  def finish(b: java.util.HashMap[String, java.lang.Double]): Map[String, Double] =
+    TreeMap.from(b.asScala.view.map { case (k, v) => k -> v.doubleValue })
+  def bufferEncoder: Encoder[java.util.HashMap[String, java.lang.Double]] = Encoders.kryo
   def outputEncoder: Encoder[Map[String, Double]] = ExpressionEncoders.mapStringDouble
 }
 

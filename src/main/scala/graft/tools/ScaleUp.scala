@@ -1,7 +1,7 @@
 package graft.tools
 
-import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{Engine, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only: deterministically scale an existing SF directory by K× for
@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * corpus by unioning K key-shifted copies of every table:
   *
   *  - fact/entity keys are offset per copy by a round power of ten above
-  *    the table's max key, so copies never collide and join fan-outs
+  *    the max of their key domain's parent key (see [[ScaleUp.KeyDomain]]),
+  *    so copies never collide and join fan-outs
   *    (customer↔orders↔lineitem, events.user_id, embeddings.vec_id)
   *    replicate per copy → every query's work scales ~linearly;
   *  - nation/region (shared dimensions) are NOT replicated — foreign
@@ -29,35 +30,60 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.tools.ScaleUp <srcDir> <dstDir> <copies>
   */
 object ScaleUp {
+
+  /** A key domain: a parent table's key column and the foreign-key
+    * columns that refer to it. Every column of a domain shifts by the
+    * same per-copy offset, so copy i's children join copy i's parents.
+    * (events.user_id joins customer.c_custkey in the TPC-DS shapes.)
+    */
+  final case class KeyDomain(parent: (String, String), children: Seq[(String, String)])
+
+  val domains: Seq[KeyDomain] = Seq(
+    KeyDomain("customer" -> "c_custkey", Seq("orders" -> "o_custkey", "events" -> "user_id")),
+    KeyDomain("orders" -> "o_orderkey", Seq("lineitem" -> "l_orderkey")),
+    KeyDomain("supplier" -> "s_suppkey", Seq("lineitem" -> "l_suppkey")),
+    KeyDomain("part" -> "p_partkey", Seq("lineitem" -> "l_partkey")),
+    KeyDomain("documents" -> "doc_id", Nil),
+    KeyDomain("embeddings" -> "vec_id", Nil))
+
+  /** Next power of ten ≥ max+1, so shifted ids stay readable and mod-k
+    * blocking predicates (doc_id % 5) keep their selectivity per copy. */
+  def offsetAbove(max: Long): Long = {
+    var p = 10L
+    while (p <= max) p *= 10
+    p
+  }
+
+  /** (table, column) → per-copy offset: one offset per domain, taken from
+    * the parent key's max. A child's own max never enters: a child max of
+    * 9999 under a parent max of 10000 would otherwise shift by 10⁴ against
+    * the parent's 10⁵ and sever every cross-copy join. `parentMax` is only
+    * called on the domains' parent columns. */
+  def columnOffsets(parentMax: ((String, String)) => Long): Map[(String, String), Long] =
+    domains.flatMap { d =>
+      val off = offsetAbove(parentMax(d.parent))
+      (d.parent +: d.children).map(_ -> off)
+    }.toMap
+
   def main(args: Array[String]): Unit = {
     val src = args(0)
     val dst = args(1)
     val copies = args(2).toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session("local[32]", 32)
     spark.sparkContext.setLogLevel("WARN")
 
-    // next power of ten ≥ max+1, so shifted ids stay readable and mod-k
-    // blocking predicates (doc_id % 5) keep their selectivity per copy
-    def offsetFor(df: DataFrame, key: String): Long = {
-      val mx = df.agg(max(col(key))).head().getAs[Number](0).longValue()
-      var p = 10L
-      while (p <= mx) p *= 10
-      p
+    val offsets = columnOffsets { case (table, key) =>
+      Tables(spark, src, table).agg(max(col(key))).head().getAs[Number](0).longValue()
     }
 
-    def shifted(table: String, keys: Seq[String], salt: Option[String] = None): DataFrame = {
+    def shifted(table: String, salt: Option[String] = None): DataFrame = {
       val df = Tables(spark, src, table)
-      val offs = keys.map(k => k -> offsetFor(df, k)).toMap
+      val offs = offsets.collect { case ((`table`, k), off) => k -> off }
       (0 until copies).map { i =>
-        val withKeys = keys.foldLeft(df)((d, k) =>
+        val withKeys = offs.foldLeft(df) { case (d, (k, off)) =>
           // cast back so the scaled table's schema is byte-identical
-          d.withColumn(k, (col(k) + lit(offs(k) * i)).cast(df.schema(k).dataType)))
+          d.withColumn(k, (col(k) + lit(off * i)).cast(df.schema(k).dataType))
+        }
         salt match {
           case Some(textCol) if i > 0 =>
             withKeys.withColumn(textCol,
@@ -69,16 +95,16 @@ object ScaleUp {
     }
 
     val plan: Seq[(String, DataFrame)] = Seq(
-      "customer" -> shifted("customer", Seq("c_custkey")),
-      "orders" -> shifted("orders", Seq("o_orderkey", "o_custkey")),
-      "lineitem" -> shifted("lineitem", Seq("l_orderkey", "l_suppkey", "l_partkey")),
-      "supplier" -> shifted("supplier", Seq("s_suppkey")),
-      "part" -> shifted("part", Seq("p_partkey")),
+      "customer" -> shifted("customer"),
+      "orders" -> shifted("orders"),
+      "lineitem" -> shifted("lineitem"),
+      "supplier" -> shifted("supplier"),
+      "part" -> shifted("part"),
       "nation" -> Tables(spark, src, "nation"),
       "region" -> Tables(spark, src, "region"),
-      "events" -> shifted("events", Seq("user_id")),
-      "documents" -> shifted("documents", Seq("doc_id"), salt = Some("text")),
-      "embeddings" -> shifted("embeddings", Seq("vec_id")))
+      "events" -> shifted("events"),
+      "documents" -> shifted("documents", salt = Some("text")),
+      "embeddings" -> shifted("embeddings"))
 
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dst))
     plan.foreach { case (name, df) =>

@@ -69,18 +69,34 @@ class StatelessCorpusSpec extends SparkSpec {
     // the active session per thread, and job content/row order per file
     // is untouched (same confs, same partition counts — concurrency
     // changes WHEN jobs run, not what they compute).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    //
+    // Each file gets a bounded wait, the sweep runner's 240 s watchdog:
+    // an exception or a timeout becomes that file's failure string, so
+    // one file can neither abort nor hang the collection of the others.
+    // A timed-out file's jobs are cancelled through its job group. Waits
+    // are taken in submission order, so a file's wait begins only after
+    // every earlier file has returned or timed out.
+    val timeoutS = 240L
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8,
+      new java.util.concurrent.ThreadFactory {
+        // daemon: a runner stuck in a hot loop must not pin the JVM open
+        def newThread(r: Runnable): Thread = {
+          val t = new Thread(r, "corpus-runner"); t.setDaemon(true); t
+        }
+      })
     val failures =
       try {
         val futs = allowlist.map { name =>
-          pool.submit(new java.util.concurrent.Callable[Option[String]] {
+          name -> pool.submit(new java.util.concurrent.Callable[Option[String]] {
             def call(): Option[String] = {
               val sqlText = new String(
                 Files.readAllBytes(Paths.get(corpusDir, name)), "UTF-8")
               val expected = new String(
                 Files.readAllBytes(Paths.get(corpusDir,
                   name.dropRight(4) + ".reference")), "UTF-8")
-              StatelessSweep.run(mkCorpusSession(), sqlText) match {
+              val session = mkCorpusSession()
+              session.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
+              try StatelessSweep.run(session, sqlText) match {
                 case Right(actual)
                     if actual.replaceAll("\n+$", "") ==
                       expected.replaceAll("\n+$", "") =>
@@ -89,13 +105,24 @@ class StatelessCorpusSpec extends SparkSpec {
                   Some(s"$name: output diff\n  want ${expected.take(120)}\n  got ${actual.take(120)}")
                 case Left(err) =>
                   Some(s"$name: $err")
-              }
+              } finally session.sparkContext.clearJobGroup()
             }
           })
         }
-        futs.flatMap(_.get())
+        futs.flatMap { case (name, fut) =>
+          try fut.get(timeoutS, java.util.concurrent.TimeUnit.SECONDS)
+          catch {
+            case _: java.util.concurrent.TimeoutException =>
+              spark.sparkContext.cancelJobGroup(name)
+              fut.cancel(true)
+              Some(s"$name: timeout after ${timeoutS}s")
+            case e: java.util.concurrent.ExecutionException =>
+              val cause = Option(e.getCause).getOrElse(e)
+              Some(s"$name: ${cause.getClass.getName}: ${cause.getMessage}")
+          }
+        }
       } finally {
-        pool.shutdown()
+        pool.shutdownNow()
         // a corpus session (Moscow tz, CH coercions) must not linger as
         // the thread's active session — later suites' lazy plan
         // optimization reads SQLConf.get from it (timestamp literals
